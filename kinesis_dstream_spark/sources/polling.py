@@ -14,11 +14,9 @@ source:
   collapses to a monotone row offset over the replayed event log);
   ``rows_per_batch`` emulates ``maxOffsetsPerTrigger``-style rate control
   (the Spark upgrade of the reference's sleep-based backpressure, O-10).
-  The default reader plans page-grained partitions per micro-batch and
-  fetches on the EXECUTORS (``DataSourceStreamReader`` — the shape that
-  survives 100×: shards ≅ partitions); ``option("reader", "simple")``
-  selects the driver-prefetch ``SimpleDataSourceStreamReader`` for
-  remotes that are inherently serial.
+  The reader plans page-grained partitions per micro-batch and fetches
+  on the EXECUTORS (``DataSourceStreamReader`` — the shape that
+  survives 100×: shards ≅ partitions); the driver never prefetches.
 
 The "remote API" sits behind a picklable transport seam. The default
 transport reads a local parquet file via pyarrow (the container has no
@@ -36,13 +34,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
 
@@ -202,8 +198,8 @@ class _PageRange(InputPartition):
 
 class PagedPollDataSource(DataSource):
     """Options: ``path`` (parquet file), ``page_size`` (rows per page),
-    ``rows_per_batch`` (streaming rate control), ``reader``
-    ("partitioned" default | "simple"), ``error_script`` (tests)."""
+    ``rows_per_batch`` (streaming rate control), ``error_script``
+    (tests)."""
 
     @classmethod
     def name(cls) -> str:
@@ -216,17 +212,7 @@ class PagedPollDataSource(DataSource):
         return PagedPollBatchReader(schema, self.options)
 
     def streamReader(self, schema: StructType) -> "PagedPollPartitionStreamReader":
-        if self.options.get("reader", "partitioned") == "simple":
-            # raising NOT_IMPLEMENTED makes Spark fall back to
-            # simpleStreamReader() (pyspark datasource_internal._streamReader)
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader (reader=simple)"},
-            )
         return PagedPollPartitionStreamReader(schema, self.options)
-
-    def simpleStreamReader(self, schema: StructType) -> "PagedPollStreamReader":
-        return PagedPollStreamReader(schema, self.options)
 
 
 class PagedPollBatchReader(DataSourceReader):
@@ -258,16 +244,17 @@ class PagedPollBatchReader(DataSourceReader):
 
 
 class PagedPollPartitionStreamReader(DataSourceStreamReader):
-    """Partition-planning micro-batch reader — the default, 100×-ready
-    shape (reference intent: Kinesis shards ≅ partitions, README.md:2).
+    """Partition-planning micro-batch reader — the source's only stream
+    reader, the 100×-ready shape (reference intent: Kinesis shards ≅
+    partitions, README.md:2).
 
     The driver only plans: each offset poll re-reads the remote's
     high-water mark (a growing source keeps advancing) and rate-limits
     the batch to ``rows_per_batch``; the planned cursor range splits into
     page-grained partitions whose rows are fetched BY THE EXECUTORS
-    through the pickled transport — no driver prefetch, unlike the
-    Simple reader. Offsets are checkpointed by Spark: restart replays
-    from the committed cursor (SURVEY §4 fault-tolerance row).
+    through the pickled transport — no driver prefetch. Offsets are
+    checkpointed by Spark: restart replays from the committed cursor
+    (SURVEY §4 fault-tolerance row).
     """
 
     def __init__(self, schema: StructType, options: dict):
@@ -334,51 +321,6 @@ class PagedPollPartitionStreamReader(DataSourceStreamReader):
         # nothing to acknowledge: the "remote" is a replayable log; an
         # HTTP transport would release server-side cursors here
         pass
-
-
-class PagedPollStreamReader(SimpleDataSourceStreamReader):
-    """Driver-prefetch micro-batch reader (``option("reader","simple")``).
-
-    For remotes that are themselves serial (one HTTP cursor — the
-    reference's actual regime): pages are fetched and pickled on the
-    driver. The offset dict is still checkpointed by Spark, giving
-    exactly-once planning; the partitioned reader above is the default.
-    """
-
-    def __init__(self, schema: StructType, options: dict):
-        self.transport = _make_transport(options)
-        self.rows_per_batch = int(options.get("rows_per_batch", 500))
-
-    def initialOffset(self) -> dict:
-        return {"cursor": 0}
-
-    def read(self, start: dict):
-        cursor = start["cursor"]
-        # fresh high-water mark every poll: a growing source advances
-        end = min(
-            cursor + self.rows_per_batch, _fetch_with_retry(self.transport.total_rows)
-        )
-        if end <= cursor:
-            return iter([]), {"cursor": cursor}
-        table = _fetch_with_retry(
-            lambda: self.transport.fetch_page(cursor, end - cursor)
-        )
-        # SimpleDataSourceStreamReader prefetches driver-side and pickles
-        # the batch into its cache — must be a materialized list, not a
-        # generator; rows_per_batch bounds the memory footprint.
-        rows = [
-            tuple(row[f] for f in table.schema.names) for row in table.to_pylist()
-        ]
-        return rows, {"cursor": end}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        cursor, stop = start["cursor"], end["cursor"]
-        table = _fetch_with_retry(
-            lambda: self.transport.fetch_page(cursor, stop - cursor)
-        )
-        return (
-            tuple(row[f] for f in table.schema.names) for row in table.to_pylist()
-        )
 
 
 def register(spark) -> None:

@@ -10,18 +10,52 @@ DuckDB-comparable (SURVEY §7 hard-part 2: no wall-clock dependence).
 At production scale the same builders run unbounded with
 ``processingTime`` triggers, a durable checkpoint, and a real sink
 (sources/sinks.py); only the trigger/sink wiring differs.
+
+The ``foreachBatch`` maintenance jobs are written the same way: each
+states only its per-batch logic and its drain-time readout, and gets
+the wiring from helpers that exist once — ``_staged_stream`` (a fixture
+table staged as a multi-file stream), ``_drain`` (the bounded
+checkpointed run), and, for the two fixed per-sf granule stores, the
+fingerprint gate (``_reset_stale_store`` before the drain,
+``stores.write_meta`` after it, ``_fresh_granules`` for the
+``*_from_store`` readers). Every job falls in one of four maintenance
+classes, which decide how a replayed micro-batch stays harmless:
+
+* ADDITIVE granules (counts, fixed-point sums) → epoch upsert: each
+  partial row carries its ``batch_id`` and ``_epoch_upsert`` replaces
+  that epoch's rows, so re-delivery overwrites instead of adding
+  (hierarchical rollup, percentile and daily granules, gap-fill, PMI;
+  ``streaming_hierarchical_rollup`` states the REPLAY CONTRACT they
+  all share).
+* DISTRIBUTIVE granules + a HOLISTIC step at drain time → the same
+  ``_epoch_upsert`` for the mergeable part; the non-mergeable step
+  (quartiles, z-test, keeper rule) runs over the merged granules at
+  drain, where it is exact (RFM, A/B z-test, sentence dedup).
+* ORDER-SENSITIVE aggregates → affected-key recompute: anti-join the
+  batch against the store on event_id, rebuild only the touched keys,
+  carry the rest over, ``stores.swap_dir`` the result (SCD-2,
+  transitions).
+* SET SEMANTICS → append-if-absent: insertion is idempotent, so the
+  anti-join guard of ``_append_absent`` is the whole replay story
+  (cohort base view, chunk store, near-dup pairs; the frozen-quantizer
+  vector stores of ``_frozen_store_ingest`` guard inside their appends;
+  the HLL rollup gets the same property from its lossless register
+  union).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
 import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis_dstream_spark import stores
 from kinesis_dstream_spark.functions.exact import exact_sum
 from kinesis_dstream_spark.stores import swap_dir
 from kinesis_dstream_spark.tables import load_table
@@ -31,6 +65,14 @@ from kinesis_dstream_spark.tables import load_table
 _UID = getattr(os, "getuid", lambda: 0)()
 
 
+def _sf_temp_dir(sf_dir: str, name: str) -> str:
+    """Fixed per-(user, sf) temp dir ``kds_<name>_u<uid>_<sf path tag>``
+    — every staged input and auto-managed store of this module lives
+    under one of these."""
+    tag = sf_dir.strip("/").replace("/", "_")
+    return os.path.join(tempfile.gettempdir(), f"kds_{name}_u{_UID}_{tag}")
+
+
 def _table_stream_dir(sf_dir: str, table: str) -> str:
     """Stage a directory containing (a symlink to) a fixture parquet.
 
@@ -38,8 +80,7 @@ def _table_stream_dir(sf_dir: str, table: str) -> str:
     fixture ships single files. A symlink dir under tmp keeps the
     fixture read-only and copies nothing.
     """
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(tempfile.gettempdir(), f"kds_stream_{tag}", table)
+    d = os.path.join(_sf_temp_dir(sf_dir, "stream"), table)
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, f"{table}.parquet")
     if not os.path.exists(link):
@@ -47,8 +88,160 @@ def _table_stream_dir(sf_dir: str, table: str) -> str:
     return d
 
 
-def _events_stream_dir(sf_dir: str) -> str:
-    return _table_stream_dir(sf_dir, "events")
+def _file_stream(
+    spark: SparkSession, src: str, files_per_trigger: int = 1
+) -> DataFrame:
+    """File-source stream over a parquet dir, ``files_per_trigger``
+    files per micro-batch. A ``timestamp_ntz`` ts becomes TimestampType
+    (watermarks require it; the session tz is pinned UTC, so the cast
+    is a pure reinterpretation — see ``_events_stream``)."""
+    schema = spark.read.parquet(src).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(src)
+    )
+    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return stream
+
+
+def _staged_dir(
+    spark: SparkSession, sf_dir: str, table: str, n_files: int = 4
+) -> str:
+    """Stage a fixture table as an ``n_files``-file parquet dir, so the
+    file source delivers multiple micro-batches; the single-file fixture
+    would otherwise drain in one batch and never exercise the
+    append/replay machinery. Written once per (sf, table, n_files) and
+    reused."""
+    d = os.path.join(_sf_temp_dir(sf_dir, "stream"), f"{table}_x{n_files}")
+    if not os.path.exists(os.path.join(d, "_SUCCESS")):
+        load_table(spark, sf_dir, table).repartition(n_files).write.mode(
+            "overwrite"
+        ).parquet(d)
+    return d
+
+
+def _staged_files(spark: SparkSession, sf_dir: str, table: str) -> list[str]:
+    """The staged table's part files — what a file-source checkpoint
+    over it indexes, by path. A fixed store records them in its sidecar:
+    a re-staged source (new part-file names, e.g. after a temp-dir
+    cleanup) must rebuild the store, never be re-delivered as new
+    epochs against the old checkpoint."""
+    d = _staged_dir(spark, sf_dir, table)
+    return sorted(glob.glob(os.path.join(d, "*.parquet")))
+
+
+def _staged_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    files_per_trigger: int = 1,
+    n_files: int = 4,
+) -> DataFrame:
+    """Stream a staged fixture table (``_staged_dir``),
+    ``files_per_trigger`` files per micro-batch."""
+    return _file_stream(
+        spark, _staged_dir(spark, sf_dir, table, n_files), files_per_trigger
+    )
+
+
+def _drain(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> None:
+    """Run ``fn(batch_df, batch_id)`` on every micro-batch available now,
+    checkpointed at ``checkpoint_dir``, and return when the stream is
+    drained — the bounded ``foreachBatch`` run of every maintenance job.
+    A rerun against the same checkpoint drains only new files."""
+    q = (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def _epoch_upsert(
+    spark: SparkSession,
+    partials: DataFrame,
+    batch_id: int,
+    cur_path: str,
+    tmp_path: str,
+) -> None:
+    """Replace epoch ``batch_id``'s rows of the granule store at
+    ``cur_path`` with ``partials``: keep every row whose ``batch_id``
+    differs, union the new partials tagged with this id, write
+    ``tmp_path`` and swap it in (stores.swap_dir). Re-delivering an
+    epoch overwrites its rows instead of adding to them."""
+    merged = partials.withColumn("batch_id", F.lit(batch_id).cast("long"))
+    if os.path.exists(cur_path):
+        kept = spark.read.parquet(cur_path).where(F.col("batch_id") != batch_id)
+        merged = kept.unionByName(merged)
+    merged.write.mode("overwrite").parquet(tmp_path)
+    swap_dir(tmp_path, cur_path)
+
+
+def _append_absent(
+    spark: SparkSession, rows: DataFrame, keys: list[str], path: str
+) -> None:
+    """Append the ``rows`` whose ``keys`` are not yet in the parquet
+    store at ``path`` — set insertion, idempotent under replay."""
+    if os.path.exists(path):
+        rows = rows.join(spark.read.parquet(path).select(*keys), keys, "left_anti")
+    rows.write.mode("append").parquet(path)
+
+
+def _reset_stale_store(
+    store_dir: str, meta: dict, checkpoint_dir: str | None
+) -> None:
+    """Open a fixed per-sf store for a drain: unless its sidecar equals
+    ``meta``, wipe it — together with a caller-provided checkpoint, which
+    must die with the state it indexed: wiping only the state would make
+    the next drain see every file as already processed and serve
+    empty/stale granules (r7 ADVICE). The caller records ``meta`` with
+    ``stores.write_meta`` AFTER a completed drain, so a crash mid-drain
+    leaves a store that reads as stale."""
+    if stores.read_meta(store_dir) != meta and os.path.exists(store_dir):
+        shutil.rmtree(store_dir)
+        if checkpoint_dir is not None and os.path.exists(checkpoint_dir):
+            shutil.rmtree(checkpoint_dir)
+    os.makedirs(store_dir, exist_ok=True)
+
+
+def _sum_epochs(
+    spark: SparkSession, cur_path: str, keys: tuple[str, ...], sums: tuple[str, ...]
+) -> DataFrame:
+    """Fold an epoch-keyed granule store to one row per key, summing the
+    additive columns over epochs."""
+    return (
+        spark.read.parquet(cur_path)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in sums])
+    )
+
+
+def _fresh_granules(
+    spark: SparkSession,
+    sf_dir: str,
+    store_dir: str,
+    keys: tuple[str, ...],
+    sums: tuple[str, ...] = ("c",),
+) -> DataFrame | None:
+    """The freshness gate of every ``*_from_store`` reader: the store's
+    merged granules when the fingerprint in its sidecar matches the
+    current events table (one count+bit_xor aggregate, no raw-row
+    shuffle), else None — the caller then falls back to its scan path.
+    An absent or torn sidecar reads as stale (stores.read_meta)."""
+    cur_path = os.path.join(store_dir, "current")
+    meta = stores.read_meta(store_dir) or {}
+    if os.path.exists(cur_path) and meta.get(
+        "fingerprint"
+    ) == _events_fingerprint(spark, sf_dir):
+        return _sum_epochs(spark, cur_path, keys, sums)
+    return None
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,7 +255,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set(NANOS_AS_LONG_CONF, "true")
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(raw_schema).parquet(_events_stream_dir(sf_dir))
+    stream = spark.readStream.schema(raw_schema).parquet(
+        _table_stream_dir(sf_dir, "events")
+    )
     ts_type = dict(stream.dtypes).get("ts")
     if ts_type == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -428,8 +623,6 @@ def streaming_changelog_merge(
     The bounded drain's final state must equal the batch
     ``changelog_latest_state`` — which is exactly what the oracle checks.
     """
-    import shutil
-
     from pyspark.sql import Window
 
     state_dir = state_dir or tempfile.mkdtemp(prefix="kds_state_")
@@ -451,14 +644,7 @@ def streaming_changelog_merge(
         latest.write.mode("overwrite").parquet(tmp)
         swap_dir(tmp, cur_path)
 
-    ev = _events_stream(spark, sf_dir)
-    q = (
-        ev.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(state_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(_events_stream(spark, sf_dir), merge, os.path.join(state_dir, "chk"))
     return spark.read.parquet(cur_path).select(
         "user_id",
         "event_id",
@@ -466,22 +652,6 @@ def streaming_changelog_merge(
         "value",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_s"),
     )
-
-
-def _table_multifile_dir(
-    spark: SparkSession, sf_dir: str, table: str, n_files: int = 4
-) -> str:
-    """Stage a fixture table as an n-file parquet dir so the file stream
-    delivers multiple micro-batches (maxFilesPerTrigger=1); the
-    single-file fixture would otherwise drain in one batch and never
-    exercise the append/replay machinery."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(tempfile.gettempdir(), f"kds_stream_{tag}", f"{table}_x{n_files}")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        load_table(spark, sf_dir, table).repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(d)
-    return d
 
 
 def streaming_hll_rollup(
@@ -510,8 +680,6 @@ def streaming_hll_rollup(
     maxFilesPerTrigger=1, so the union path is exercised across real
     micro-batch boundaries, not a single batch.
     """
-    import shutil
-
     state_dir = state_dir or tempfile.mkdtemp(prefix="kds_hll_state_")
     cur_path = os.path.join(state_dir, "current")
 
@@ -535,23 +703,11 @@ def streaming_hll_rollup(
         merged.write.mode("overwrite").parquet(tmp)
         swap_dir(tmp, cur_path)
 
-    from kinesis_dstream_spark.tables import NANOS_AS_LONG_CONF
-
-    spark.conf.set(NANOS_AS_LONG_CONF, "true")
-    src = _table_multifile_dir(spark, sf_dir, "events", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(state_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "events"),
+        upsert,
+        checkpoint_dir or os.path.join(state_dir, "chk"),
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(cur_path)
         .groupBy("event_type")
@@ -579,9 +735,7 @@ def streaming_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_wav_table,
     )
 
-    src = _table_multifile_dir(spark, sf_dir, "documents", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    stream = _staged_stream(spark, sf_dir, "documents")
     decoded = decode_wav_batch(synth_wav_table(stream.select("doc_id")))
     return _run_bounded(decoded, "stream_wav_decode", "append")
 
@@ -612,23 +766,13 @@ def streaming_chunk_store_ingest(
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         chunks = chunk_documents(batch_df).drop("chunk_text")
-        if os.path.exists(cur):
-            existing = spark.read.parquet(cur).select("doc_id", "chunk_no")
-            chunks = chunks.join(existing, ["doc_id", "chunk_no"], "left_anti")
-        chunks.write.mode("append").parquet(cur)
+        _append_absent(spark, chunks, ["doc_id", "chunk_no"], cur)
 
-    src = _table_multifile_dir(spark, sf_dir, "documents", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(store_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "documents"),
+        ingest,
+        checkpoint_dir or os.path.join(store_dir, "chk"),
     )
-    q.awaitTermination()
     return spark.read.parquet(cur)
 
 
@@ -643,9 +787,6 @@ def chunk_store_compact(
     copy via tmp-dir + aside-rename swap; content is byte-identical
     (pytest-pinned). Returns the resulting file count.
     """
-    import glob
-    import shutil
-
     cur = os.path.join(store_dir, "chunks")
     files = glob.glob(os.path.join(cur, "*.parquet"))
     if len(files) <= max_files:
@@ -655,10 +796,6 @@ def chunk_store_compact(
     df.repartition(max_files).write.mode("overwrite").parquet(tmp)
     swap_dir(tmp, cur)
     return len(glob.glob(os.path.join(cur, "*.parquet")))
-
-
-def _embeddings_multifile_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    return _table_multifile_dir(spark, sf_dir, "embeddings", n_files)
 
 
 def streaming_ann_index_ingest(
@@ -700,12 +837,6 @@ def streaming_ann_index_ingest(
     if not os.path.exists(os.path.join(index_path, ann_index.SIDECAR)):
         ann_index.ann_index_init(emb, index_path)
 
-    src = _embeddings_multifile_dir(spark, sf_dir, n_files)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.dropDuplicates(["vec_id"])
         if ann_index._n_parquet_files(index_path):
@@ -714,14 +845,53 @@ def streaming_ann_index_ingest(
         if not batch.isEmpty():
             ann_index.ann_index_append(batch, index_path)
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "embeddings", n_files=n_files),
+        ingest,
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return ann_index.ann_index_search(spark, index_path, n_queries=5, k=5)
+
+
+def _frozen_store_ingest(
+    spark: SparkSession,
+    sf_dir: str,
+    store_path: str | None,
+    checkpoint_dir: str | None,
+    n_files: int,
+    prefix: str,
+    meta_name: str,
+    ensure: Callable[[DataFrame, str], object],
+    append: Callable[[DataFrame, str], object],
+) -> tuple[DataFrame, str]:
+    """The streaming ingest shared by the frozen-quantizer vector stores:
+    bootstrap the store ONCE on the 80% base split (``vec_id % 5 != 4``)
+    via ``ensure``, then drain the staged embeddings and ``append`` each
+    micro-batch's vec_id-deduped rows. Returns (embeddings, store path)
+    for the caller's serve.
+
+    The bootstrap gates on read_meta, not os.path.exists: a torn or
+    unparseable sidecar means "no complete build — rebuild", never
+    hand-repair (r10 ADVICE). Replay safety (cell-pruned row anti-join +
+    batch fingerprint) lives inside each ``append`` — no wrapper-side
+    whole-store scan."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    store_path = store_path or os.path.join(work, "idx")
+    emb = load_table(spark, sf_dir, "embeddings")
+    if stores.read_meta(store_path, meta_name) is None:
+        ensure(emb.filter(F.col("vec_id") % 5 != 4), store_path)
+
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+        batch = batch_df.dropDuplicates(["vec_id"])
+        if not batch.isEmpty():
+            append(batch, store_path)
+
+    _drain(
+        _staged_stream(spark, sf_dir, "embeddings", n_files=n_files),
+        ingest,
+        checkpoint_dir or os.path.join(work, "chk"),
+    )
+    return emb, store_path
 
 
 def streaming_ivf_det_ingest(
@@ -756,42 +926,19 @@ def streaming_ivf_det_ingest(
     lives in ``ivf_det_store_append`` so every caller gets it), one
     partitioned append.
     """
-    from kinesis_dstream_spark import stores
     from kinesis_dstream_spark.operators import clustering
 
-    work = tempfile.mkdtemp(prefix="kds_ivfdstream_")
-    store_path = store_path or os.path.join(work, "idx")
-    checkpoint_dir = checkpoint_dir or os.path.join(work, "chk")
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # gate on read_meta, not os.path.exists: a torn/unparseable sidecar
-    # means "no complete build — rebuild", never hand-repair (r10 ADVICE)
-    if stores.read_meta(store_path, clustering._IVF_DET_META) is None:
-        clustering.ivf_det_store_ensure(
-            emb.filter(F.col("vec_id") % 5 != 4), store_path
-        )
-
-    src = _embeddings_multifile_dir(spark, sf_dir, n_files)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    emb, store_path = _frozen_store_ingest(
+        spark,
+        sf_dir,
+        store_path,
+        checkpoint_dir,
+        n_files,
+        "kds_ivfdstream_",
+        clustering._IVF_DET_META,
+        clustering.ivf_det_store_ensure,
+        clustering.ivf_det_store_append,
     )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["vec_id"])
-        if not batch.isEmpty():
-            # replay safety (cell-pruned row anti-join + batch
-            # fingerprint) lives inside the append — no wrapper-side
-            # whole-store scan
-            clustering.ivf_det_store_append(batch, store_path)
-
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return clustering.ivf_det_serve_frozen(emb, store_path)
 
 
@@ -818,42 +965,19 @@ def streaming_ivf_pq_det_ingest(
     reads ONLY the batch's cell partitions (r11 — pruning lives in
     ``ivf_pq_det_store_append``), one partitioned append.
     """
-    from kinesis_dstream_spark import stores
     from kinesis_dstream_spark.operators import pq_det
 
-    work = tempfile.mkdtemp(prefix="kds_ivfpqstream_")
-    store_path = store_path or os.path.join(work, "idx")
-    checkpoint_dir = checkpoint_dir or os.path.join(work, "chk")
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # gate on read_meta, not os.path.exists: a torn/unparseable sidecar
-    # means "no complete build — rebuild", never hand-repair (r10 ADVICE)
-    if stores.read_meta(store_path, pq_det._PQ_META) is None:
-        pq_det.ivf_pq_det_store_ensure(
-            emb.filter(F.col("vec_id") % 5 != 4), store_path
-        )
-
-    src = _embeddings_multifile_dir(spark, sf_dir, n_files)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    emb, store_path = _frozen_store_ingest(
+        spark,
+        sf_dir,
+        store_path,
+        checkpoint_dir,
+        n_files,
+        "kds_ivfpqstream_",
+        pq_det._PQ_META,
+        pq_det.ivf_pq_det_store_ensure,
+        pq_det.ivf_pq_det_store_append,
     )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["vec_id"])
-        if not batch.isEmpty():
-            # replay safety (cell-pruned row anti-join + batch
-            # fingerprint) lives inside the append — no wrapper-side
-            # whole-store scan
-            pq_det.ivf_pq_det_store_append(batch, store_path)
-
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return pq_det.ivf_pq_det_serve_frozen(emb, store_path)
 
 
@@ -881,38 +1005,19 @@ def streaming_ivf_pq_res_ingest(
     over the recentered slices), one partition-pruned replay read, one
     partitioned append.
     """
-    from kinesis_dstream_spark import stores
     from kinesis_dstream_spark.operators import pq_det
 
-    work = tempfile.mkdtemp(prefix="kds_ivfpqresstream_")
-    store_path = store_path or os.path.join(work, "idx")
-    checkpoint_dir = checkpoint_dir or os.path.join(work, "chk")
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # torn sidecar -> rebuild (the read_meta gate, r10 ADVICE)
-    if stores.read_meta(store_path, pq_det._RES_META) is None:
-        pq_det.ivf_pq_res_store_ensure(
-            emb.filter(F.col("vec_id") % 5 != 4), store_path
-        )
-
-    src = _embeddings_multifile_dir(spark, sf_dir, n_files)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    emb, store_path = _frozen_store_ingest(
+        spark,
+        sf_dir,
+        store_path,
+        checkpoint_dir,
+        n_files,
+        "kds_ivfpqresstream_",
+        pq_det._RES_META,
+        pq_det.ivf_pq_res_store_ensure,
+        pq_det.ivf_pq_res_store_append,
     )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["vec_id"])
-        if not batch.isEmpty():
-            pq_det.ivf_pq_res_store_append(batch, store_path)
-
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return pq_det.ivf_pq_res_serve_frozen(emb, store_path)
 
 
@@ -938,38 +1043,19 @@ def streaming_ivf_sq8_ingest(
     literals), one fused clamped encode (2·d literals), one
     partition-pruned replay read, one partitioned append.
     """
-    from kinesis_dstream_spark import stores
     from kinesis_dstream_spark.operators import sq_det
 
-    work = tempfile.mkdtemp(prefix="kds_ivfsq8stream_")
-    store_path = store_path or os.path.join(work, "idx")
-    checkpoint_dir = checkpoint_dir or os.path.join(work, "chk")
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # torn sidecar -> rebuild (the read_meta gate, r10 ADVICE)
-    if stores.read_meta(store_path, sq_det._SQ_META) is None:
-        sq_det.ivf_sq8_store_ensure(
-            emb.filter(F.col("vec_id") % 5 != 4), store_path
-        )
-
-    src = _embeddings_multifile_dir(spark, sf_dir, n_files)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    emb, store_path = _frozen_store_ingest(
+        spark,
+        sf_dir,
+        store_path,
+        checkpoint_dir,
+        n_files,
+        "kds_ivfsq8stream_",
+        sq_det._SQ_META,
+        sq_det.ivf_sq8_store_ensure,
+        sq_det.ivf_sq8_store_append,
     )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["vec_id"])
-        if not batch.isEmpty():
-            sq_det.ivf_sq8_store_append(batch, store_path)
-
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return sq_det.ivf_sq8_serve_frozen(emb, store_path)
 
 
@@ -999,38 +1085,19 @@ def streaming_knn_graph_ingest(
     candidates), two appends. The graph structure itself is never
     rescanned.
     """
-    from kinesis_dstream_spark import stores
     from kinesis_dstream_spark.operators import knn_graph
 
-    work = tempfile.mkdtemp(prefix="kds_knngstream_")
-    store_path = store_path or os.path.join(work, "idx")
-    checkpoint_dir = checkpoint_dir or os.path.join(work, "chk")
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # gate on read_meta, not os.path.exists (torn sidecar = rebuild)
-    if stores.read_meta(store_path, knn_graph._KNNG_META) is None:
-        knn_graph.knn_graph_store_ensure(
-            emb.filter(F.col("vec_id") % 5 != 4), store_path
-        )
-
-    src = _embeddings_multifile_dir(spark, sf_dir, n_files)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    emb, store_path = _frozen_store_ingest(
+        spark,
+        sf_dir,
+        store_path,
+        checkpoint_dir,
+        n_files,
+        "kds_knngstream_",
+        knn_graph._KNNG_META,
+        knn_graph.knn_graph_store_ensure,
+        knn_graph.knn_graph_store_append,
     )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["vec_id"])
-        if not batch.isEmpty():
-            knn_graph.knn_graph_store_append(batch, store_path)
-
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return knn_graph.knn_graph_serve_frozen(spark, store_path)
 
 
@@ -1063,7 +1130,6 @@ def streaming_lex_index_ingest(
     appends; the postings themselves are never rescanned (the
     torn-window guard reads only the doc_id column).
     """
-    from kinesis_dstream_spark import stores
     from kinesis_dstream_spark.operators import lexindex
 
     work = tempfile.mkdtemp(prefix="kds_lexstream_")
@@ -1074,23 +1140,15 @@ def streaming_lex_index_ingest(
     if stores.read_meta(store_path, lexindex._LEX_META) is None:
         lexindex.lex_index_build(docs.filter(F.col("doc_id") % 5 != 4), store_path)
 
-    src = _table_multifile_dir(spark, sf_dir, "documents", n_files)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.isEmpty():
             lexindex.lex_index_append(batch_df, store_path)
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "documents", n_files=n_files),
+        ingest,
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return lexindex.bm25_from_store(spark, store_path)
 
 
@@ -1131,23 +1189,15 @@ def streaming_dedup_index_ingest(
         docs = load_table(spark, sf_dir, "documents")
         dedup_index.dedup_index_build(docs.filter(F.lit(False)), index_path)
 
-    src = _table_multifile_dir(spark, sf_dir, "documents", n_files)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         dups = dedup_index.dedup_index_ingest(batch_df, index_path, threshold)
         dups.write.mode("append").parquet(flags_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "documents", n_files=n_files),
+        ingest,
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return spark.read.parquet(flags_dir)
 
 
@@ -1291,18 +1341,11 @@ def streaming_scd2_maintenance(
         out.write.mode("overwrite").parquet(tmp)
         swap_dir(tmp, cur)
 
-    src = _table_multifile_dir(spark, sf_dir, "events", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(store_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "events"),
+        merge,
+        checkpoint_dir or os.path.join(store_dir, "chk"),
     )
-    q.awaitTermination()
     return spark.read.parquet(cur)
 
 
@@ -1347,40 +1390,24 @@ def streaming_hierarchical_rollup(
     batch twin's DuckDB oracle in the registry.
     """
     from kinesis_dstream_spark.operators import eventflow
-    from kinesis_dstream_spark.tables import NANOS_AS_LONG_CONF
 
     state_dir = state_dir or tempfile.mkdtemp(prefix="kds_cagg_state_")
     cur_path = os.path.join(state_dir, "current")
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        partials = eventflow.minute_granules(batch_df).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
+        _epoch_upsert(
+            spark,
+            eventflow.minute_granules(batch_df),
+            batch_id,
+            cur_path,
+            os.path.join(state_dir, f"tmp_{batch_id}"),
         )
-        merged = partials
-        if os.path.exists(cur_path):
-            kept = spark.read.parquet(cur_path).where(
-                F.col("batch_id") != batch_id
-            )
-            merged = kept.unionByName(partials)
-        tmp = os.path.join(state_dir, f"tmp_{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        swap_dir(tmp, cur_path)
 
-    spark.conf.set(NANOS_AS_LONG_CONF, "true")
-    src = _table_multifile_dir(spark, sf_dir, "events", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(state_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "events"),
+        upsert,
+        checkpoint_dir or os.path.join(state_dir, "chk"),
     )
-    q.awaitTermination()
     granules = spark.read.parquet(cur_path).drop("batch_id")
     return eventflow.rollup_from_minute_granules(granules)
 
@@ -1415,29 +1442,18 @@ def streaming_percentile_maintenance(
     oracle.
     """
     from kinesis_dstream_spark.functions.exact import fixedpoint
-    from kinesis_dstream_spark.operators.dataquality import _PCT_SCALE
+    from kinesis_dstream_spark.operators.dataquality import (
+        _PCT_SCALE,
+        percentiles_from_value_frequency,
+    )
 
     # fixed per-sf store + content fingerprint (the kds_pairstream_
     # convention): repeat invocations drain zero new files against the
     # existing checkpoint and serve the maintained granules — one temp
     # copy per sf, the operator's true incremental cost in the bench
-    if state_dir is None:
-        state_dir = _percentile_store_dir(sf_dir)
-        fp = _events_fingerprint(spark, sf_dir)
-        meta = os.path.join(state_dir, "_meta.json")
-        stored = _stored_fingerprint(meta)
-        if stored != fp and os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-            # an external checkpoint must die with the state it indexed:
-            # wiping only the state would make the next drain see every
-            # file as already processed and serve empty/stale granules
-            # (r7 ADVICE)
-            if checkpoint_dir is not None and os.path.exists(checkpoint_dir):
-                shutil.rmtree(checkpoint_dir)
-        os.makedirs(state_dir, exist_ok=True)
-        meta_fp = (meta, fp)  # written AFTER a completed drain
-    else:
-        meta_fp = None
+    state_dir, meta = _events_store(
+        spark, sf_dir, state_dir, _percentile_store_dir(sf_dir), checkpoint_dir
+    )
     cur_path = os.path.join(state_dir, "current")
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -1447,49 +1463,47 @@ def streaming_percentile_maintenance(
             )
             .groupBy("event_type", "iv")
             .agg(F.count(F.lit(1)).alias("c"))
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
-        merged = partials
-        if os.path.exists(cur_path):
-            kept = spark.read.parquet(cur_path).where(F.col("batch_id") != batch_id)
-            merged = kept.unionByName(partials)
         tmp = os.path.join(state_dir, f"tmp_{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        swap_dir(tmp, cur_path)
+        _epoch_upsert(spark, partials, batch_id, cur_path, tmp)
 
-    src = _table_multifile_dir(spark, sf_dir, "events", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(state_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "events"),
+        upsert,
+        checkpoint_dir or os.path.join(state_dir, "chk"),
     )
-    q.awaitTermination()
-    if meta_fp is not None:
-        import json
-
-        with open(meta_fp[0], "w") as f:
-            json.dump({"fingerprint": meta_fp[1]}, f)
-    from kinesis_dstream_spark.operators.dataquality import (
-        percentiles_from_value_frequency,
+    if meta is not None:
+        stores.write_meta(state_dir, meta)
+    return percentiles_from_value_frequency(
+        _sum_epochs(spark, cur_path, _VALUE_FREQ_KEYS, ("c",))
     )
-
-    freq = (
-        spark.read.parquet(cur_path)
-        .groupBy("event_type", "iv")
-        .agg(F.sum("c").alias("c"))
-    )
-    return percentiles_from_value_frequency(freq)
 
 
 def _percentile_store_dir(sf_dir: str) -> str:
     """Fixed per-sf auto-managed granule store location."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    return f"{tempfile.gettempdir()}/kds_pctl_state_u{_UID}_{tag}"
+    return _sf_temp_dir(sf_dir, "pctl_state")
+
+
+def _events_store(
+    spark: SparkSession,
+    sf_dir: str,
+    state_dir: str | None,
+    auto_dir: str,
+    checkpoint_dir: str | None,
+) -> tuple[str, dict | None]:
+    """(store dir, meta to record after the drain). A caller-given
+    ``state_dir`` is used as is, unfingerprinted; the default is the
+    fixed per-sf ``auto_dir``, opened through the fingerprint gate
+    (``_reset_stale_store``) on the events content and the staged
+    source files."""
+    if state_dir is not None:
+        return state_dir, None
+    meta = {
+        "fingerprint": _events_fingerprint(spark, sf_dir),
+        "source": _staged_files(spark, sf_dir, "events"),
+    }
+    _reset_stale_store(auto_dir, meta, checkpoint_dir)
+    return auto_dir, meta
 
 
 def _events_fingerprint(spark: SparkSession, sf_dir: str) -> str:
@@ -1507,13 +1521,24 @@ def _events_fingerprint(spark: SparkSession, sf_dir: str) -> str:
     return f"n={fp_row['n']}|h={fp_row['h']}"
 
 
-def _stored_fingerprint(meta_path: str) -> str | None:
-    import json
+_VALUE_FREQ_KEYS = ("event_type", "iv")
 
-    if not os.path.exists(meta_path):
-        return None
-    with open(meta_path) as f:
-        return json.load(f).get("fingerprint")
+
+def _value_frequency_or_scan(
+    spark: SparkSession,
+    sf_dir: str,
+    from_freq: Callable[[DataFrame], DataFrame],
+    scan: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """``from_freq`` over the fresh value-frequency granules, else
+    ``scan`` over the events table — the body of every value-frequency
+    ``*_from_store`` reader."""
+    freq = _fresh_granules(
+        spark, sf_dir, _percentile_store_dir(sf_dir), _VALUE_FREQ_KEYS
+    )
+    if freq is not None:
+        return from_freq(freq)
+    return scan(load_table(spark, sf_dir, "events"))
 
 
 def grouped_percentiles_from_store(
@@ -1542,22 +1567,11 @@ def grouped_percentiles_from_store(
     row-grain work happened once, incrementally, in the maintenance
     stream.
     """
-    from kinesis_dstream_spark.operators import dataquality
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import dataquality as dq
 
-    state_dir = _percentile_store_dir(sf_dir)
-    cur_path = os.path.join(state_dir, "current")
-    meta = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(cur_path) and _stored_fingerprint(
-        meta
-    ) == _events_fingerprint(spark, sf_dir):
-        freq = (
-            spark.read.parquet(cur_path)
-            .groupBy("event_type", "iv")
-            .agg(F.sum("c").alias("c"))
-        )
-        return dataquality.percentiles_from_value_frequency(freq)
-    return dataquality.grouped_percentiles(load_table(spark, sf_dir, "events"))
+    return _value_frequency_or_scan(
+        spark, sf_dir, dq.percentiles_from_value_frequency, dq.grouped_percentiles
+    )
 
 
 def value_ks_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1575,22 +1589,11 @@ def value_ks_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``value_ks_drift``. Both exact, results identical (pytest-pinned),
     oracle = the same VALUE_KS_DRIFT_SQL.
     """
-    from kinesis_dstream_spark.operators import dataquality
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import dataquality as dq
 
-    state_dir = _percentile_store_dir(sf_dir)
-    cur_path = os.path.join(state_dir, "current")
-    meta = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(cur_path) and _stored_fingerprint(
-        meta
-    ) == _events_fingerprint(spark, sf_dir):
-        freq = (
-            spark.read.parquet(cur_path)
-            .groupBy("event_type", "iv")
-            .agg(F.sum("c").alias("c"))
-        )
-        return dataquality.ks_from_value_frequency(freq)
-    return dataquality.value_ks_drift(load_table(spark, sf_dir, "events"))
+    return _value_frequency_or_scan(
+        spark, sf_dir, dq.ks_from_value_frequency, dq.value_ks_drift
+    )
 
 
 def rank_normalize_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1602,22 +1605,11 @@ def rank_normalize_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the siblings; both paths run
     ``rank_normalize_from_value_frequency`` on a value-identical
     table, oracle = the shared VALUE_RANK_NORMALIZE_SQL."""
-    from kinesis_dstream_spark.operators import dataquality
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import dataquality as dq
 
-    state_dir = _percentile_store_dir(sf_dir)
-    cur_path = os.path.join(state_dir, "current")
-    meta = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(cur_path) and _stored_fingerprint(
-        meta
-    ) == _events_fingerprint(spark, sf_dir):
-        freq = (
-            spark.read.parquet(cur_path)
-            .groupBy("event_type", "iv")
-            .agg(F.sum("c").alias("c"))
-        )
-        return dataquality.rank_normalize_from_value_frequency(freq)
-    return dataquality.value_rank_normalize(load_table(spark, sf_dir, "events"))
+    return _value_frequency_or_scan(
+        spark, sf_dir, dq.rank_normalize_from_value_frequency, dq.value_rank_normalize
+    )
 
 
 def gini_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1630,22 +1622,11 @@ def gini_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the siblings; both paths run
     ``gini_from_value_frequency`` on a value-identical table, oracle =
     the shared VALUE_GINI_SQL."""
-    from kinesis_dstream_spark.operators import dataquality
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import dataquality as dq
 
-    state_dir = _percentile_store_dir(sf_dir)
-    cur_path = os.path.join(state_dir, "current")
-    meta = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(cur_path) and _stored_fingerprint(
-        meta
-    ) == _events_fingerprint(spark, sf_dir):
-        freq = (
-            spark.read.parquet(cur_path)
-            .groupBy("event_type", "iv")
-            .agg(F.sum("c").alias("c"))
-        )
-        return dataquality.gini_from_value_frequency(freq)
-    return dataquality.value_gini_by_type(load_table(spark, sf_dir, "events"))
+    return _value_frequency_or_scan(
+        spark, sf_dir, dq.gini_from_value_frequency, dq.value_gini_by_type
+    )
 
 
 def trimmed_mean_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1656,22 +1637,11 @@ def trimmed_mean_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the siblings; both paths run
     ``trimmed_mean_from_value_frequency`` on a value-identical table,
     oracle = the shared VALUE_TRIMMED_MEAN_SQL."""
-    from kinesis_dstream_spark.operators import dataquality
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import dataquality as dq
 
-    state_dir = _percentile_store_dir(sf_dir)
-    cur_path = os.path.join(state_dir, "current")
-    meta = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(cur_path) and _stored_fingerprint(
-        meta
-    ) == _events_fingerprint(spark, sf_dir):
-        freq = (
-            spark.read.parquet(cur_path)
-            .groupBy("event_type", "iv")
-            .agg(F.sum("c").alias("c"))
-        )
-        return dataquality.trimmed_mean_from_value_frequency(freq)
-    return dataquality.value_trimmed_mean(load_table(spark, sf_dir, "events"))
+    return _value_frequency_or_scan(
+        spark, sf_dir, dq.trimmed_mean_from_value_frequency, dq.value_trimmed_mean
+    )
 
 
 def tukey_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1681,22 +1651,11 @@ def tukey_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions of (event_type, iv, count)). Freshness gate and fallback
     identical to the siblings; oracle = the shared
     VALUE_TUKEY_OUTLIERS_SQL."""
-    from kinesis_dstream_spark.operators import dataquality
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import dataquality as dq
 
-    state_dir = _percentile_store_dir(sf_dir)
-    cur_path = os.path.join(state_dir, "current")
-    meta = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(cur_path) and _stored_fingerprint(
-        meta
-    ) == _events_fingerprint(spark, sf_dir):
-        freq = (
-            spark.read.parquet(cur_path)
-            .groupBy("event_type", "iv")
-            .agg(F.sum("c").alias("c"))
-        )
-        return dataquality.tukey_outliers_from_value_frequency(freq)
-    return dataquality.value_tukey_outliers(load_table(spark, sf_dir, "events"))
+    return _value_frequency_or_scan(
+        spark, sf_dir, dq.tukey_outliers_from_value_frequency, dq.value_tukey_outliers
+    )
 
 
 def wasserstein_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1707,22 +1666,11 @@ def wasserstein_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback identical to the siblings; both paths run
     ``wasserstein_from_value_frequency`` on a value-identical table,
     oracle = the shared VALUE_WASSERSTEIN_SQL."""
-    from kinesis_dstream_spark.operators import dataquality
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import dataquality as dq
 
-    state_dir = _percentile_store_dir(sf_dir)
-    cur_path = os.path.join(state_dir, "current")
-    meta = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(cur_path) and _stored_fingerprint(
-        meta
-    ) == _events_fingerprint(spark, sf_dir):
-        freq = (
-            spark.read.parquet(cur_path)
-            .groupBy("event_type", "iv")
-            .agg(F.sum("c").alias("c"))
-        )
-        return dataquality.wasserstein_from_value_frequency(freq)
-    return dataquality.value_wasserstein_drift(load_table(spark, sf_dir, "events"))
+    return _value_frequency_or_scan(
+        spark, sf_dir, dq.wasserstein_from_value_frequency, dq.value_wasserstein_drift
+    )
 
 
 def theil_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1731,23 +1679,10 @@ def theil_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the decomposition is a pure function of (event_type, iv, count)).
     Freshness gate and fallback identical to the siblings; oracle =
     the shared VALUE_THEIL_SQL."""
-    from kinesis_dstream_spark.operators import dataquality
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import dataquality as dq
 
-    state_dir = _percentile_store_dir(sf_dir)
-    cur_path = os.path.join(state_dir, "current")
-    meta = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(cur_path) and _stored_fingerprint(
-        meta
-    ) == _events_fingerprint(spark, sf_dir):
-        freq = (
-            spark.read.parquet(cur_path)
-            .groupBy("event_type", "iv")
-            .agg(F.sum("c").alias("c"))
-        )
-        return dataquality.theil_from_value_frequency(freq)
-    return dataquality.value_theil_decomposition(
-        load_table(spark, sf_dir, "events")
+    return _value_frequency_or_scan(
+        spark, sf_dir, dq.theil_from_value_frequency, dq.value_theil_decomposition
     )
 
 
@@ -1756,8 +1691,7 @@ def _dailyc_store_dir(sf_dir: str) -> str:
     schema widened in r9 from (type, d, c) to the value-moment form
     (type, d, c, sy, syy) — versioning the path retires any v1 store
     in place instead of serving rows that lack the new columns."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    return f"{tempfile.gettempdir()}/kds_dailyc_state_v2_u{_UID}_{tag}"
+    return _sf_temp_dir(sf_dir, "dailyc_state_v2")
 
 
 def streaming_daily_count_maintenance(
@@ -1786,83 +1720,60 @@ def streaming_daily_count_maintenance(
     maintained granules — batch-equal by additivity, so the registry
     wires it to the identical DAILY_SEASONAL_SQL oracle.
     """
-    if state_dir is None:
-        state_dir = _dailyc_store_dir(sf_dir)
-        fp = _events_fingerprint(spark, sf_dir)
-        meta = os.path.join(state_dir, "_meta.json")
-        stored = _stored_fingerprint(meta)
-        if stored != fp and os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-            if checkpoint_dir is not None and os.path.exists(checkpoint_dir):
-                shutil.rmtree(checkpoint_dir)
-        os.makedirs(state_dir, exist_ok=True)
-        meta_fp = (meta, fp)  # written AFTER a completed drain
-    else:
-        meta_fp = None
+    from kinesis_dstream_spark.operators.eventflow import (
+        daily_value_moments,
+        seasonal_from_daily_counts,
+    )
+
+    state_dir, meta = _events_store(
+        spark, sf_dir, state_dir, _dailyc_store_dir(sf_dir), checkpoint_dir
+    )
     cur_path = os.path.join(state_dir, "current")
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from kinesis_dstream_spark.operators.eventflow import daily_value_moments
-
         # r9: the granule carries the value moments too (c, sy, syy) —
         # still additive, same replay semantics; the counts consumers
         # simply project c
-        partials = daily_value_moments(batch_df).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
+        _epoch_upsert(
+            spark,
+            daily_value_moments(batch_df),
+            batch_id,
+            cur_path,
+            os.path.join(state_dir, f"tmp_{batch_id}"),
         )
-        merged = partials
-        if os.path.exists(cur_path):
-            kept = spark.read.parquet(cur_path).where(F.col("batch_id") != batch_id)
-            merged = kept.unionByName(partials)
-        tmp = os.path.join(state_dir, f"tmp_{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        swap_dir(tmp, cur_path)
 
-    src = _table_multifile_dir(spark, sf_dir, "events", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    _drain(
+        _staged_stream(spark, sf_dir, "events"),
+        upsert,
+        checkpoint_dir or os.path.join(state_dir, "chk"),
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(state_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    if meta is not None:
+        stores.write_meta(state_dir, meta)
+    return seasonal_from_daily_counts(
+        _sum_epochs(spark, cur_path, _DAILY_KEYS, ("c",))
     )
-    q.awaitTermination()
-    if meta_fp is not None:
-        import json
 
-        with open(meta_fp[0], "w") as f:
-            json.dump({"fingerprint": meta_fp[1]}, f)
-    from kinesis_dstream_spark.operators.eventflow import seasonal_from_daily_counts
 
-    daily = (
-        spark.read.parquet(cur_path)
-        .groupBy("event_type", "d")
-        .agg(F.sum("c").alias("c"))
+_DAILY_KEYS = ("event_type", "d")
+_DAILY_MOMENTS = ("c", "sy", "syy")
+
+
+def _daily_or_scan(
+    spark: SparkSession,
+    sf_dir: str,
+    from_daily: Callable[[DataFrame], DataFrame],
+    scan: Callable[[DataFrame], DataFrame],
+    sums: tuple[str, ...] = ("c",),
+) -> DataFrame:
+    """``from_daily`` over the fresh daily granules (``sums`` projected
+    and summed over epochs), else ``scan`` over the events table — the
+    body of every daily-series ``*_from_store`` reader."""
+    daily = _fresh_granules(
+        spark, sf_dir, _dailyc_store_dir(sf_dir), _DAILY_KEYS, sums
     )
-    return seasonal_from_daily_counts(daily)
-
-
-def _daily_counts_if_fresh(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The maintained daily-count table when the store is fresh, else
-    None (caller falls back to the scan path). Freshness = one
-    count+bit_xor aggregate, no raw-row shuffle."""
-    state_dir = _dailyc_store_dir(sf_dir)
-    cur_path = os.path.join(state_dir, "current")
-    meta = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(cur_path) and _stored_fingerprint(
-        meta
-    ) == _events_fingerprint(spark, sf_dir):
-        return (
-            spark.read.parquet(cur_path)
-            .groupBy("event_type", "d")
-            .agg(F.sum("c").alias("c"))
-        )
-    return None
+    if daily is not None:
+        return from_daily(daily)
+    return scan(load_table(spark, sf_dir, "events"))
 
 
 def seasonal_decomposition_from_store(
@@ -1874,14 +1785,10 @@ def seasonal_decomposition_from_store(
     table, so results are identical either way (pytest-pinned) and the
     oracle is the shared DAILY_SEASONAL_SQL. At 100 TB: an O(|days|)
     read instead of an O(|events|) re-scan per refresh."""
-    from kinesis_dstream_spark.operators import eventflow
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import eventflow as ef
 
-    daily = _daily_counts_if_fresh(spark, sf_dir)
-    if daily is not None:
-        return eventflow.seasonal_from_daily_counts(daily)
-    return eventflow.daily_seasonal_decomposition(
-        load_table(spark, sf_dir, "events")
+    return _daily_or_scan(
+        spark, sf_dir, ef.seasonal_from_daily_counts, ef.daily_seasonal_decomposition
     )
 
 
@@ -1889,35 +1796,20 @@ def daily_autocorr_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation SERVED FROM the same daily-count granules — the
     second consumer (the sufficient-statistic argument again: one
     maintenance stream, every daily-series functional reads it)."""
-    from kinesis_dstream_spark.operators import eventflow
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import eventflow as ef
 
-    daily = _daily_counts_if_fresh(spark, sf_dir)
-    if daily is not None:
-        return eventflow.autocorr_from_daily_counts(daily)
-    return eventflow.daily_count_autocorr(load_table(spark, sf_dir, "events"))
+    return _daily_or_scan(
+        spark, sf_dir, ef.autocorr_from_daily_counts, ef.daily_count_autocorr
+    )
 
 
 def _daily_moments_if_fresh(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     """The full (event_type, d, c, sy, syy) granule table when the
-    store is fresh, else None — the value-moment counterpart of
-    ``_daily_counts_if_fresh`` (same gate, wider projection)."""
-    state_dir = _dailyc_store_dir(sf_dir)
-    cur_path = os.path.join(state_dir, "current")
-    meta = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(cur_path) and _stored_fingerprint(
-        meta
-    ) == _events_fingerprint(spark, sf_dir):
-        return (
-            spark.read.parquet(cur_path)
-            .groupBy("event_type", "d")
-            .agg(
-                F.sum("c").alias("c"),
-                F.sum("sy").alias("sy"),
-                F.sum("syy").alias("syy"),
-            )
-        )
-    return None
+    store is fresh, else None — the moment projection
+    ``value_trend_from_store`` reads."""
+    return _fresh_granules(
+        spark, sf_dir, _dailyc_store_dir(sf_dir), _DAILY_KEYS, _DAILY_MOMENTS
+    )
 
 
 def value_trend_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1928,13 +1820,15 @@ def value_trend_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-identical table and share VALUE_TREND_REGRESSION_SQL. At
     100 TB: an O(|types|·|days|) read instead of an O(|events|)
     re-scan per drift check."""
-    from kinesis_dstream_spark.operators import eventflow
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import eventflow as ef
 
-    moments = _daily_moments_if_fresh(spark, sf_dir)
-    if moments is not None:
-        return eventflow.value_trend_from_daily_moments(moments)
-    return eventflow.value_trend_regression(load_table(spark, sf_dir, "events"))
+    return _daily_or_scan(
+        spark,
+        sf_dir,
+        ef.value_trend_from_daily_moments,
+        ef.value_trend_regression,
+        _DAILY_MOMENTS,
+    )
 
 
 def seasonal_anomaly_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1942,13 +1836,11 @@ def seasonal_anomaly_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     the store's fourth consumer; counts project out of the moment
     rows, both paths run ``seasonal_anomaly_from_daily_counts`` on a
     value-identical table and share SEASONAL_ANOMALY_SQL."""
-    from kinesis_dstream_spark.operators import eventflow
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import eventflow as ef
 
-    daily = _daily_counts_if_fresh(spark, sf_dir)
-    if daily is not None:
-        return eventflow.seasonal_anomaly_from_daily_counts(daily)
-    return eventflow.seasonal_anomaly_bands(load_table(spark, sf_dir, "events"))
+    return _daily_or_scan(
+        spark, sf_dir, ef.seasonal_anomaly_from_daily_counts, ef.seasonal_anomaly_bands
+    )
 
 
 def cusum_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1959,13 +1851,11 @@ def cusum_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scanning O(|events|) per check is the whole economics. Both
     paths run ``cusum_from_daily_counts`` on a value-identical table
     and share CUSUM_SHIFT_SQL."""
-    from kinesis_dstream_spark.operators import eventflow
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import eventflow as ef
 
-    daily = _daily_counts_if_fresh(spark, sf_dir)
-    if daily is not None:
-        return eventflow.cusum_from_daily_counts(daily)
-    return eventflow.cusum_shift_detection(load_table(spark, sf_dir, "events"))
+    return _daily_or_scan(
+        spark, sf_dir, ef.cusum_from_daily_counts, ef.cusum_shift_detection
+    )
 
 
 def mann_kendall_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1975,13 +1865,11 @@ def mann_kendall_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch statistics (seasonal decomposition, autocorrelation, trend
     regression, residual anomaly bands, CUSUM, MK) — the
     sufficient-statistic argument in its strongest form."""
-    from kinesis_dstream_spark.operators import eventflow
-    from kinesis_dstream_spark.tables import load_table
+    from kinesis_dstream_spark.operators import eventflow as ef
 
-    daily = _daily_counts_if_fresh(spark, sf_dir)
-    if daily is not None:
-        return eventflow.mann_kendall_from_daily_counts(daily)
-    return eventflow.mann_kendall_trend(load_table(spark, sf_dir, "events"))
+    return _daily_or_scan(
+        spark, sf_dir, ef.mann_kendall_from_daily_counts, ef.mann_kendall_trend
+    )
 
 
 def streaming_transition_maintenance(
@@ -2054,23 +1942,11 @@ def streaming_transition_maintenance(
         merged.write.mode("overwrite").parquet(tmp)
         swap_dir(tmp, pair_store)
 
-    from kinesis_dstream_spark.tables import NANOS_AS_LONG_CONF
-
-    spark.conf.set(NANOS_AS_LONG_CONF, "true")
-    src = _table_multifile_dir(spark, sf_dir, "events", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(store_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "events"),
+        merge,
+        checkpoint_dir or os.path.join(store_dir, "chk"),
     )
-    q.awaitTermination()
     counts = (
         spark.read.parquet(pair_store)
         .groupBy("prev_type", "next_type")
@@ -2124,33 +2000,15 @@ def streaming_rfm_maintenance(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(fixedpoint(F.col("value"), 100)).alias("s"),
             )
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
-        merged = partials
-        if os.path.exists(cur_path):
-            kept = spark.read.parquet(cur_path).where(F.col("batch_id") != batch_id)
-            merged = kept.unionByName(partials)
         tmp = os.path.join(state_dir, f"tmp_{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        swap_dir(tmp, cur_path)
+        _epoch_upsert(spark, partials, batch_id, cur_path, tmp)
 
-    from kinesis_dstream_spark.tables import NANOS_AS_LONG_CONF
-
-    spark.conf.set(NANOS_AS_LONG_CONF, "true")
-    src = _table_multifile_dir(spark, sf_dir, "events", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(state_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "events"),
+        upsert,
+        checkpoint_dir or os.path.join(state_dir, "chk"),
     )
-    q.awaitTermination()
     horizon = F.lit("2024-02-01").cast("timestamp")
     per_user = (
         spark.read.parquet(cur_path)
@@ -2201,31 +2059,15 @@ def streaming_ab_ztest_maintenance(
                     (F.col("event_type") == "purchase").cast("int")
                 ).alias("conv")
             )
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
-        merged = partials
-        if os.path.exists(cur_path):
-            kept = spark.read.parquet(cur_path).where(F.col("batch_id") != batch_id)
-            merged = kept.unionByName(partials)
         tmp = os.path.join(state_dir, f"tmp_{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        swap_dir(tmp, cur_path)
+        _epoch_upsert(spark, partials, batch_id, cur_path, tmp)
 
-    from kinesis_dstream_spark.tables import NANOS_AS_LONG_CONF
-
-    spark.conf.set(NANOS_AS_LONG_CONF, "true")
-    src = _table_multifile_dir(spark, sf_dir, "events", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(state_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "events"),
+        upsert,
+        checkpoint_dir or os.path.join(state_dir, "chk"),
     )
-    q.awaitTermination()
     users = (
         spark.read.parquet(cur_path)
         .groupBy("user_id")
@@ -2284,34 +2126,15 @@ def streaming_sentence_dedup_maintenance(
                 F.min("pos").alias("min_pos"),
                 F.max(F.length("sent")).alias("sent_chars"),
             )
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
-        merged = partials
-        if os.path.exists(cur_path):
-            kept = spark.read.parquet(cur_path).where(
-                F.col("batch_id") != batch_id
-            )
-            merged = kept.unionByName(partials)
         tmp = os.path.join(state_dir, f"tmp_{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        swap_dir(tmp, cur_path)
+        _epoch_upsert(spark, partials, batch_id, cur_path, tmp)
 
-    src = _table_multifile_dir(spark, sf_dir, "documents", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    _drain(
+        _staged_stream(spark, sf_dir, "documents"),
+        upsert,
+        checkpoint_dir or os.path.join(state_dir, "chk"),
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(state_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     g = (
         spark.read.parquet(cur_path)
         .groupBy("sent", "doc_id", "source")
@@ -2396,43 +2219,17 @@ def streaming_pmi_maintenance(
             .filter(F.col("w2").isNotNull())
             .select(F.col("w").alias("w1"), "w2")
         )
-        uni_part = (
-            words.groupBy("w")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        )
-        big_part = (
-            big.groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        )
+        uni_part = words.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
+        big_part = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
         for path, part in ((uni_path, uni_part), (big_path, big_part)):
-            merged = part
-            if os.path.exists(path):
-                kept = spark.read.parquet(path).where(
-                    F.col("batch_id") != batch_id
-                )
-                merged = kept.unionByName(part)
             tmp = os.path.join(state_dir, f"tmp_{os.path.basename(path)}_{batch_id}")
-            merged.write.mode("overwrite").parquet(tmp)
-            swap_dir(tmp, path)
+            _epoch_upsert(spark, part, batch_id, path, tmp)
 
-    src = _table_multifile_dir(spark, sf_dir, "documents", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    _drain(
+        _staged_stream(spark, sf_dir, "documents"),
+        upsert,
+        checkpoint_dir or os.path.join(state_dir, "chk"),
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(state_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # drain: the scoring chain and thresholds are IMPORTED from the
     # batch operator (ADVICE r11) — the registered oracle is built from
     # token_pmi_collocations' defaults, so the drain must share them by
@@ -2462,12 +2259,7 @@ def streaming_cohort_maintenance(
 ) -> DataFrame:
     """Streaming maintenance of cohort retention's base view: the
     DISTINCT (user_id, activity_day) set — SET-SEMANTICS granules, the
-    fourth maintenance class in this module's taxonomy:
-
-    * additive granules + batch-id upsert  → hierarchical rollup
-    * distributive granules + drain-time holistic step → RFM
-    * order-sensitive → affected-key recompute (transitions, SCD-2)
-    * set semantics → append-if-absent (here, and the HLL/doc-dedup jobs)
+    fourth maintenance class of the module docstring (append-if-absent).
 
     Insertion into a set is naturally idempotent, so replay safety needs
     only the anti-join guard on the key — no batch-id bookkeeping. The
@@ -2487,27 +2279,13 @@ def streaming_cohort_maintenance(
         days = (
             batch_df.select("user_id", F.to_date("ts").alias("day")).distinct()
         )
-        if os.path.exists(cur):
-            days = days.join(spark.read.parquet(cur), ["user_id", "day"], "left_anti")
-        days.write.mode("append").parquet(cur)
+        _append_absent(spark, days, ["user_id", "day"], cur)
 
-    from kinesis_dstream_spark.tables import NANOS_AS_LONG_CONF
-
-    spark.conf.set(NANOS_AS_LONG_CONF, "true")
-    src = _table_multifile_dir(spark, sf_dir, "events", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(store_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "events"),
+        upsert,
+        checkpoint_dir or os.path.join(store_dir, "chk"),
     )
-    q.awaitTermination()
 
     from pyspark.sql import Window as W
 
@@ -2574,33 +2352,15 @@ def streaming_gapfill_maintenance(
             )
             .groupBy("event_type", "hidx")
             .agg(F.count(F.lit(1)).alias("n_events"), F.sum("iv").alias("s"))
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
-        merged = partials
-        if os.path.exists(cur_path):
-            kept = spark.read.parquet(cur_path).where(F.col("batch_id") != batch_id)
-            merged = kept.unionByName(partials)
         tmp = os.path.join(state_dir, f"tmp_{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        swap_dir(tmp, cur_path)
+        _epoch_upsert(spark, partials, batch_id, cur_path, tmp)
 
-    from kinesis_dstream_spark.tables import NANOS_AS_LONG_CONF
-
-    spark.conf.set(NANOS_AS_LONG_CONF, "true")
-    src = _table_multifile_dir(spark, sf_dir, "events", n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(state_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "events"),
+        upsert,
+        checkpoint_dir or os.path.join(state_dir, "chk"),
     )
-    q.awaitTermination()
     hourly = (
         spark.read.parquet(cur_path)
         .groupBy("event_type", "hidx")
@@ -2705,26 +2465,18 @@ def streaming_near_dup_pairs_maintenance(
     # stored pairs — the operator's actual incremental cost, instead of
     # re-paying the full bootstrap per call and leaking a store copy.
     # Content+params fingerprint (dedup_index convention) wipes and
-    # rebuilds on regenerated fixtures or changed pair definitions.
-    if store_dir is None:
-        tag = sf_dir.strip("/").replace("/", "_")
-        store_dir = f"{tempfile.gettempdir()}/kds_pairstream_u{_UID}_{tag}"
-    fp = corpus_fingerprint(
-        load_table(spark, sf_dir, "documents"), k=k, threshold=threshold
-    )
-    meta_path = os.path.join(store_dir, "_meta.json")
-    stored_fp = None
-    if os.path.exists(meta_path):
-        import json
-
-        with open(meta_path) as f:
-            stored_fp = json.load(f).get("fingerprint")
-    if stored_fp != fp and os.path.exists(store_dir):
-        shutil.rmtree(store_dir)
-        # external checkpoint dies with the store it indexed (r7 ADVICE
-        # on streaming_percentile_maintenance — same hazard here)
-        if checkpoint_dir is not None and os.path.exists(checkpoint_dir):
-            shutil.rmtree(checkpoint_dir)
+    # rebuilds on regenerated fixtures, changed pair definitions or a
+    # re-staged source (``_staged_files``).
+    store_dir = store_dir or _sf_temp_dir(sf_dir, "pairstream")
+    meta = {
+        "fingerprint": corpus_fingerprint(
+            load_table(spark, sf_dir, "documents"), k=k, threshold=threshold
+        ),
+        "k": k,
+        "threshold": threshold,
+        "source": _staged_files(spark, sf_dir, "documents"),
+    }
+    _reset_stale_store(store_dir, meta, checkpoint_dir)
     rows_path = os.path.join(store_dir, "shingle_rows")
     pairs_path = os.path.join(store_dir, "pairs")
     hot_path = os.path.join(store_dir, "hot")
@@ -2774,31 +2526,18 @@ def streaming_near_dup_pairs_maintenance(
             new_pairs = intra.unionByName(cross)
         else:
             new_pairs = intra
-        if os.path.exists(pairs_path):
-            existing = spark.read.parquet(pairs_path).select("doc_a", "doc_b")
-            new_pairs = new_pairs.join(existing, ["doc_a", "doc_b"], "left_anti")
-        new_pairs.write.mode("append").parquet(pairs_path)
+        _append_absent(spark, new_pairs, ["doc_a", "doc_b"], pairs_path)
         ex_b.write.mode("append").parquet(rows_path)
 
-    src = _table_multifile_dir(spark, sf_dir, "documents", n_files=4)
-    schema = spark.read.parquet(src).schema
     # two files per trigger: still a genuine multi-batch drain (intra-
     # and cross-batch pair discovery both exercised, replay pytest
     # unchanged) at half the fixed per-micro-batch overhead
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 2).parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(store_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _staged_stream(spark, sf_dir, "documents", files_per_trigger=2),
+        ingest,
+        checkpoint_dir or os.path.join(store_dir, "chk"),
     )
-    q.awaitTermination()
-    import json
-
-    with open(meta_path, "w") as f:
-        json.dump({"fingerprint": fp, "k": k, "threshold": threshold}, f)
+    stores.write_meta(store_dir, meta)
     return spark.read.parquet(pairs_path)
 
 
@@ -2835,24 +2574,21 @@ def streaming_erasure_propagation(
         erase_parquet_store,
     )
 
-    tag = sf_dir.strip("/").replace("/", "_")
     pristine = _ensure_gov_stores(
-        spark, sf_dir, f"{tempfile.gettempdir()}/kds_gov_stores_u{_UID}_{tag}"
+        spark, sf_dir, _sf_temp_dir(sf_dir, "gov_stores")
     )
     # fixed per-sf work dir: reuse-if-exists is CORRECT here because
     # anti-join erasure is idempotent — a rerun against already-erased
     # copies drains zero new requests and reports identical accounting
     # (rows_before always comes from the pristine stores). Also bounds
     # temp growth to one copy.
-    work_dir = work_dir or f"{tempfile.gettempdir()}/kds_gov_stream_u{_UID}_{tag}"
-    stores = {}
+    work_dir = work_dir or _sf_temp_dir(sf_dir, "gov_stream")
+    copies = {}
     for name, src in pristine.items():
         dst = os.path.join(work_dir, name)
         if not os.path.exists(dst):
-            import shutil
-
             shutil.copytree(src, dst)
-        stores[name] = dst
+        copies[name] = dst
 
     # stage the request queue as a 4-file parquet dir (multi-batch drain)
     req_dir = os.path.join(work_dir, "requests")
@@ -2871,9 +2607,9 @@ def streaming_erasure_propagation(
         requests.repartition(4).write.mode("overwrite").parquet(req_dir)
 
     doc_stores = [
-        os.path.join(stores["chunk_store"], "chunks"),
-        os.path.join(stores["minhash_dedup_index"], "bands"),
-        os.path.join(stores["minhash_dedup_index"], "shingles"),
+        os.path.join(copies["chunk_store"], "chunks"),
+        os.path.join(copies["minhash_dedup_index"], "bands"),
+        os.path.join(copies["minhash_dedup_index"], "shingles"),
     ]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2891,21 +2627,13 @@ def streaming_erasure_propagation(
             for p in doc_stores:
                 erase_parquet_store(spark, p, doc_req, "doc_id")
         if vec_req.count() > 0:
-            erase_parquet_store(spark, stores["ann_index"], vec_req, "vec_id")
+            erase_parquet_store(spark, copies["ann_index"], vec_req, "vec_id")
 
-    schema = spark.read.parquet(req_dir).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(req_dir)
+    _drain(
+        _file_stream(spark, req_dir),
+        apply_batch,
+        checkpoint_dir or os.path.join(work_dir, "chk"),
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option(
-            "checkpointLocation", checkpoint_dir or os.path.join(work_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     # accounting: before from pristine, after read back from disk
     from functools import reduce
@@ -2914,13 +2642,13 @@ def streaming_erasure_propagation(
     for name in ("ann_index", "chunk_store", "minhash_dedup_index"):
         if name == "ann_index":
             pre = [pristine[name]]
-            post = [stores[name]]
+            post = [copies[name]]
         elif name == "chunk_store":
             pre = [os.path.join(pristine[name], "chunks")]
-            post = [os.path.join(stores[name], "chunks")]
+            post = [os.path.join(copies[name], "chunks")]
         else:
             pre = [os.path.join(pristine[name], s) for s in ("bands", "shingles")]
-            post = [os.path.join(stores[name], s) for s in ("bands", "shingles")]
+            post = [os.path.join(copies[name], s) for s in ("bands", "shingles")]
         before = reduce(
             lambda a, b: a.crossJoin(b),
             [
@@ -2957,9 +2685,6 @@ def pairs_store_compact(
     byte-identical before/after (pytest); the frozen hot table is a
     single write and never needs compaction.
     """
-    import glob
-    import shutil
-
     stats = {"tables_compacted": 0, "files_before": 0, "files_after": 0}
     for sub in ("pairs", "shingle_rows"):
         cur = os.path.join(store_dir, sub)
@@ -2995,10 +2720,7 @@ def _late_audit_stage(spark: SparkSession, sf_dir: str) -> str:
     Rebuilt per (sf) under a fixed dir; reuse-if-exists is safe
     because the split is a pure function of the fixture.
     """
-    import glob
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"{tempfile.gettempdir()}/kds_late_audit_u{_UID}_{tag}"
+    base = _sf_temp_dir(sf_dir, "late_audit")
     stage = os.path.join(base, "stage")
     if os.path.exists(os.path.join(stage, "_DONE")):
         return stage
@@ -3059,15 +2781,7 @@ def streaming_late_data_audit(
     before trusting its completeness SLO. (Fixture contract: max ts
     is not exactly midnight, true at every sf.)
     """
-    stage = _late_audit_stage(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _file_stream(spark, _late_audit_stage(spark, sf_dir))
     agg = (
         stream.withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("win"), F.col("event_type"))

@@ -322,24 +322,11 @@ def test_partitioned_stream_reader_restart_no_regression(sf_dir):
 
 
 def test_stream_reader_dispatch(sf_dir):
-    """Default = partition-planning reader; reader=simple opts back into
-    the driver-prefetch SimpleDataSourceStreamReader via the documented
-    NOT_IMPLEMENTED fallback."""
-    import pytest
-    from pyspark.errors import PySparkNotImplementedError
-
+    """The stream reader is the partition-planning reader."""
     schema = polling._arrow_schema_to_spark(f"{sf_dir}/events.parquet")
     ds = polling.PagedPollDataSource({"path": f"{sf_dir}/events.parquet"})
     assert isinstance(
         ds.streamReader(schema), polling.PagedPollPartitionStreamReader
-    )
-    ds_simple = polling.PagedPollDataSource(
-        {"path": f"{sf_dir}/events.parquet", "reader": "simple"}
-    )
-    with pytest.raises(PySparkNotImplementedError):
-        ds_simple.streamReader(schema)
-    assert isinstance(
-        ds_simple.simpleStreamReader(schema), polling.PagedPollStreamReader
     )
 
 

@@ -690,16 +690,13 @@ def test_late_data_audit_drops_and_metrics(spark, sf_dir):
     buffer (one-batch-behind) slice must be admitted, and the state
     metrics must record watermark drops in the final batch."""
     import shutil
-    import tempfile
-    import os
 
     from pyspark.sql import functions as F
 
     from kinesis_dstream_spark.streaming import jobs
     from kinesis_dstream_spark.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    shutil.rmtree(f"{tempfile.gettempdir()}/kds_late_audit_u{os.getuid()}_{tag}", ignore_errors=True)
+    shutil.rmtree(jobs._sf_temp_dir(sf_dir, "late_audit"), ignore_errors=True)
     result, dropped = jobs.streaming_late_data_audit(spark, sf_dir, with_metrics=True)
     assert dropped > 0  # group-granular, so sign-only
     ev = load_table(spark, sf_dir, "events").withColumn(
@@ -791,6 +788,42 @@ def test_percentile_store_wipe_also_wipes_external_checkpoint(
         spark, sf_dir, state_dir=None, checkpoint_dir=cp
     )
     assert sorted(map(tuple, again.collect())) == want
+
+
+def test_torn_percentile_meta_reads_as_stale(spark, sf_dir):
+    """A truncated ``_meta.json`` (a crash mid-write by a writer that
+    predates the atomic sidecar protocol) must read as "no complete
+    build": the from-store reader falls back to the scan path and the
+    maintenance job rebuilds, both equal to the batch operator — never a
+    JSONDecodeError out of a registry query."""
+    import os
+
+    from kinesis_dstream_spark.operators import dataquality
+    from kinesis_dstream_spark.streaming import jobs
+    from kinesis_dstream_spark.tables import load_table
+
+    want = sorted(
+        map(
+            tuple,
+            dataquality.grouped_percentiles(
+                load_table(spark, sf_dir, "events")
+            ).collect(),
+        )
+    )
+    jobs.streaming_percentile_maintenance(spark, sf_dir).collect()
+    meta = os.path.join(jobs._percentile_store_dir(sf_dir), "_meta.json")
+    with open(meta) as f:
+        good = f.read()
+    with open(meta, "w") as f:
+        f.write(good[: len(good) // 2])
+
+    served = jobs.grouped_percentiles_from_store(spark, sf_dir)
+    assert sorted(map(tuple, served.collect())) == want
+
+    rebuilt = jobs.streaming_percentile_maintenance(spark, sf_dir)
+    assert sorted(map(tuple, rebuilt.collect())) == want
+    with open(meta) as f:
+        assert f.read() == good
 
 
 def test_grouped_percentiles_from_store_serves_granules(spark, sf_dir):
@@ -975,6 +1008,31 @@ def test_daily_count_store_stale_falls_back_to_scan(spark, sf_dir):
     finally:
         with open(meta, "w") as f:
             json.dump(good, f)
+
+
+def test_daily_count_store_rebuilds_when_source_is_restaged(spark, sf_dir):
+    """The auto store's checkpoint indexes the staged part files by
+    path; a re-staged source (temp-dir cleanup → new part-file names)
+    must rebuild the store rather than re-deliver every file as new
+    epochs and count each event twice."""
+    import shutil
+
+    from kinesis_dstream_spark.operators import eventflow
+    from kinesis_dstream_spark.streaming import jobs
+    from kinesis_dstream_spark.tables import load_table
+
+    want = sorted(
+        map(
+            tuple,
+            eventflow.daily_seasonal_decomposition(
+                load_table(spark, sf_dir, "events")
+            ).collect(),
+        )
+    )
+    jobs.streaming_daily_count_maintenance(spark, sf_dir).collect()
+    shutil.rmtree(jobs._staged_dir(spark, sf_dir, "events"))
+    again = jobs.streaming_daily_count_maintenance(spark, sf_dir)
+    assert sorted(map(tuple, again.collect())) == want
 
 
 def test_streaming_ivf_ingest_replay_safe_and_equals_batch(spark, sf_dir, tmp_path):

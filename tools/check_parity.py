@@ -8,10 +8,14 @@ DuckDB at a given sf dir, then compares:
 - order-insensitive value hash (canonicalized cell strings, rows sorted)
 
 Usage:  python tools/check_parity.py [sf_dir] [query ...]
+
+Each ``query`` is an exact registry name or an ``fnmatch`` pattern, e.g.
+``python tools/check_parity.py <sf_dir> 'streaming_*' '*_from_store'``.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import hashlib
 import sys
 import time
@@ -80,7 +84,7 @@ _VACUOUS_OK: dict[str, dict[str, str]] = {
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
+    patterns = sys.argv[2:]
 
     con = duckdb.connect()
     for t in TABLES:
@@ -95,7 +99,7 @@ def main() -> int:
     n_pass = n_fail = n_rowsonly = 0
     failed: list[str] = []
     for name, fn in qs.items():
-        if only and name not in only:
+        if patterns and not any(fnmatch.fnmatchcase(name, p) for p in patterns):
             continue
         t0 = time.time()
         try:
